@@ -6,7 +6,9 @@ Consumes the fact_loan table (loan_detail output) and produces:
   - the issue-month accounting summary (A5, :112-118);
   - the settled-month summary (A6, :120-127) — pandas silently drops the
     null group (unsettled loans); Spark keeps it, so the filter is
-    explicit here (SURVEY.md §5.5 parity trap).
+    explicit here (SURVEY.md §5.5 parity trap);
+  - both summaries as one tagged frame from a single grouping-sets
+    aggregate (:func:`accounting_reports`), for runs that publish both.
 
 Documented deviation (SURVEY.md §7.4): the reference's 2025 detail filter
 compares against the string '205-01-01' (:106) — a typo that makes the
@@ -97,51 +99,22 @@ def detail_2025(detail: DataFrame, *, era: str = "2025-01-01") -> DataFrame:
             .withColumn("FeeRatio", F.col("Fee") / F.col("PrincipalAmount")))
 
 
-def accounting_summary(detail: DataFrame, *, as_of: _dt.datetime,
-                       era: str | None = None) -> DataFrame:
+def accounting_summary(detail: DataFrame, *,
+                       as_of: _dt.datetime) -> DataFrame:
     """A5 (:112-118): money sums by CDMX issue month, strictly before the
     previous month's last day.
 
     Sum-then-round (round2(sum(c)), the reference's ``.sum().round(2)``,
     :116) — NOT per-row cents rounding: detail columns like TaxOnFee =
     Fee*0.16 are not 2-dp, and rounding each row before summing can
-    drift the monthly total by cents (ADVICE r1).
-
-    ``era`` (opt-in, scale path): when set, the era fee ratio — the
-    detail_2025 slice's SUM(Fee cents)/SUM(Principal cents) per issue
-    month — rides the SAME groupBy as the money sums and comes back as
-    an ``era_fee_ratio`` column (null for months before the boundary).
-    Semantically identical to aggregating the detail_2025 slice
-    separately and left-joining on issue month (the boundary predicate
-    is constant within each group, so conditional sums over the full
-    detail equal plain sums over the filtered slice), but it saves a
-    whole detail scan + month exchange + broadcast join: at 100x the
-    detail is the expensive side, and a multi-report job should fan N
-    reports out of ONE exchange per distinct grouping key (VERDICT r9
-    #1)."""
+    drift the monthly total by cents (ADVICE r1)."""
     cutoff = _last_day_prev_month(as_of).isoformat()
-    aggs = [F.expr(f"{_r2s(f'sum({c})')}").alias(c)
-            for c in ACCOUNTING_SUM_COLS]
-    if era is not None:
-        # exact-cents sums, cast to double only at the final division —
-        # the same arithmetic as the standalone era aggregate
-        cents_s = "cast(floor({c} * 100.0D + 0.5D) as bigint)"
-        aggs += [F.expr(f"sum({cents_s.format(c='Fee')})")
-                 .alias("_era_fee_cents"),
-                 F.expr(f"sum({cents_s.format(c='PrincipalAmount')})")
-                 .alias("_era_prin_cents")]
-    out = (detail
-           .groupBy("IssueMonthCDMX")
-           .agg(*aggs)
-           .filter(f"IssueMonthCDMX < CAST('{cutoff}' AS TIMESTAMP)"))
-    if era is not None:
-        out = (out.selectExpr(
-                   "*",
-                   f"CASE WHEN IssueMonthCDMX >= CAST('{era}' AS TIMESTAMP)"
-                   " THEN CAST(_era_fee_cents AS DOUBLE)"
-                   " / CAST(_era_prin_cents AS DOUBLE) END AS era_fee_ratio")
-               .drop("_era_fee_cents", "_era_prin_cents"))
-    return out.orderBy("IssueMonthCDMX")
+    return (detail
+            .groupBy("IssueMonthCDMX")
+            .agg(*[F.expr(f"{_r2s(f'sum({c})')}").alias(c)
+                   for c in ACCOUNTING_SUM_COLS])
+            .filter(f"IssueMonthCDMX < CAST('{cutoff}' AS TIMESTAMP)")
+            .orderBy("IssueMonthCDMX"))
 
 
 def settled_summary(detail: DataFrame, *, as_of: _dt.datetime) -> DataFrame:
@@ -156,3 +129,45 @@ def settled_summary(detail: DataFrame, *, as_of: _dt.datetime) -> DataFrame:
                    for c in SETTLED_SUM_COLS])
             .filter(f"SettledAtMonthCDMX <= CAST('{cutoff}' AS TIMESTAMP)")
             .orderBy("SettledAtMonthCDMX"))
+
+
+def accounting_reports(detail: DataFrame, *, as_of: _dt.datetime,
+                       era: str = "2025-01-01") -> DataFrame:
+    """A5 and A6 from ONE aggregate: ``GROUPING SETS ((IssueMonthCDMX),
+    (SettledAtMonthCDMX))`` over the detail, so both reports share one
+    detail scan and one exchange, and the detail needs no cache.
+
+    One row per report month: ``report`` ('accounting' | 'settled'),
+    ``month``, the ACCOUNTING_SUM_COLS (the six due-side sums are NULL on
+    settled rows), ``DisputeAmount`` (settled rows only) and
+    ``era_fee_ratio`` (accounting rows from ``era`` on: SUM(Fee cents) /
+    SUM(Principal cents), the detail_2025 slice's fee ratio). Each
+    report keeps its own cutoff, and the settled set's NULL group (A6's
+    pandas drop) is removed. Row for row equal to
+    :func:`accounting_summary` and :func:`settled_summary`, which stay as
+    the one-report forms."""
+    cutoff = f"CAST('{_last_day_prev_month(as_of).isoformat()}' AS TIMESTAMP)"
+    cents = "cast(floor({c} * 100.0D + 0.5D) as bigint)"
+    sums = dict.fromkeys(ACCOUNTING_SUM_COLS + SETTLED_SUM_COLS)
+    grouped = (detail
+               .groupingSets([["IssueMonthCDMX"], ["SettledAtMonthCDMX"]],
+                             "IssueMonthCDMX", "SettledAtMonthCDMX")
+               .agg(F.expr("grouping(SettledAtMonthCDMX)").alias("_acc"),
+                    *[F.expr(_r2s(f"sum({c})")).alias(c) for c in sums],
+                    F.expr(f"sum({cents.format(c='Fee')})")
+                    .alias("_fee_cents"),
+                    F.expr(f"sum({cents.format(c='PrincipalAmount')})")
+                    .alias("_prin_cents")))
+    acc_only = [c for c in ACCOUNTING_SUM_COLS if c not in SETTLED_SUM_COLS]
+    return (grouped
+            .filter(f"IF(_acc = 1, IssueMonthCDMX < {cutoff},"
+                    f" SettledAtMonthCDMX <= {cutoff})")
+            .selectExpr(
+                "IF(_acc = 1, 'accounting', 'settled') AS report",
+                "IF(_acc = 1, IssueMonthCDMX, SettledAtMonthCDMX) AS month",
+                *[f"IF(_acc = 1, {c}, NULL) AS {c}" if c in acc_only else c
+                  for c in ACCOUNTING_SUM_COLS],
+                "IF(_acc = 1, NULL, DisputeAmount) AS DisputeAmount",
+                f"IF(_acc = 1 AND IssueMonthCDMX >= CAST('{era}' AS TIMESTAMP),"
+                " CAST(_fee_cents AS DOUBLE) / CAST(_prin_cents AS DOUBLE),"
+                " NULL) AS era_fee_ratio"))

@@ -513,12 +513,12 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     35-column repayment detail (P1, with the overpaid/apportioned
     derivation and month truncations D4), then BOTH monthly money
     summaries (A5 issue-month, A6 settled-month with the explicit
-    null-group drop), stacked with a report tag; the issue-month rows
+    null-group drop) as one frame with a report tag; the issue-month rows
     carry the referral-payouts join (load_accounting_data.py:179-193,
     the a07/T-SQL surface) and the era fee ratio from the detail slice
     whose boundary documents the reference's '205-01-01' typo: the
     INTENT (IssueMonthCDMX >= era start) is implemented, with the
-    boundary injectable (detail_2025(era=...)) and rebased to
+    boundary injectable (accounting_reports(era=...)) and rebased to
     1998-01-01 for the star schema's 1995-2001 date range.
 
     Role mapping: pl01's status strings map to the reference's codes —
@@ -528,31 +528,32 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
     as_of is 2000-06-15 (cutoff = last day of prev month, 2000-05-31),
     distinct from pl01's DPD anchor: reports run at their own date.
 
-    Scale plan: ONE settlement chain (lineitem agg exchange + custkey
-    window exchange) fans into TWO consumers — the issue-month summary
-    (with the era fee ratio fused into the same groupBy as two
-    conditional cents sums: same key, so the era slice costs zero extra
-    scans/exchanges/joins) and the settled-month summary, whose key
-    genuinely differs. Both are tiny-key aggregates whose partial
-    (map-side) phase compresses each branch to ~months rows before its
-    exchange. The referral aggregate is an independent orders scan
-    collapsing to ~months rows, broadcast into the join. Money sums are
-    deterministic: every detail column is exactly 2-dp (round2'd
-    upstream), so sum-then-round (the reference's .sum().round(2))
-    cannot drift across engines within double's exact-integer range;
-    the era ratio divides two exact cents sums (one float op at the
-    end)."""
+    Scale plan: ONE settlement chain (the lineitem agg exchange; the
+    custkey window behind LoanNumber/days_late is pruned, since neither
+    report reads them) feeds ONE grouping-sets aggregate
+    (pipelines/accounting.accounting_reports): GROUPING SETS
+    ((IssueMonthCDMX), (SettledAtMonthCDMX)) expands each detail row
+    into its two report keys, and a partial (map-side) aggregate
+    compresses that to ~months rows per task before the single
+    exchange. The issue-month set also carries the era fee ratio as two
+    cents sums. The detail has one consumer, so nothing is persisted
+    and the build runs no job. The referral aggregate is an independent
+    orders scan collapsing to ~months rows, broadcast into a left join
+    whose condition also requires an accounting row, so settled rows
+    never match. Money sums are deterministic: every detail column is
+    exactly 2-dp (round2'd upstream), so sum-then-round (the
+    reference's .sum().round(2)) cannot drift across engines within
+    double's exact-integer range; the era ratio divides two exact cents
+    sums (one float op at the end)."""
     import datetime as _dt
 
     from ..pipelines.accounting import (
-        _r2s, accounting_detail, accounting_summary, settled_summary,
+        _r2s, accounting_detail, accounting_reports,
     )
 
     fact = settlement_pipeline(load(spark, sf_dir, "orders"),
                                load(spark, sf_dir, "lineitem"),
                                with_accounting_cols=True)
-    # One-parse selectExpr form (r14, VERDICT r13 next #1) — sameResult
-    # pin vs the Column form in tests/test_r14_optimizations.py.
     cdmx = "from_utc_timestamp({c}, 'America/Mexico_City')"
     r2 = _r2s
     policy = "CAST(loan_id % 3 AS INT)"
@@ -588,21 +589,10 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{cdmx.format(c='settled_at')} AS SettledAtCDMX",
         "dispute_amount AS DisputeAmount",
     )
-    # The detail feeds TWO consumers (issue-month summary with the era
-    # ratio FUSED into the same groupBy — VERDICT r9 #1: era and acc
-    # group on the same issue_month, so the era slice rides acc's
-    # exchange as two conditional cents sums instead of costing its own
-    # detail scan + exchange + broadcast join — and the settled-month
-    # summary, whose key genuinely differs). Exchange reuse does not
-    # fire across the two (different grouping keys), so tracked_persist
-    # materializes the settlement chain ONCE — O(orders) rows, the
-    # standard materialize-the-fact-once shape for a multi-report job;
-    # released by release_cached_intermediates after the action.
-    from ..operators.caching import tracked_persist
-    detail = tracked_persist(accounting_detail(mapped))
-    as_of = _dt.datetime.fromisoformat(_PL02_AS_OF + " 00:00:00")
-    acc = accounting_summary(detail, as_of=as_of, era=_PL02_ERA)
-    setl = settled_summary(detail, as_of=as_of)
+    reports = accounting_reports(
+        accounting_detail(mapped),
+        as_of=_dt.datetime.fromisoformat(_PL02_AS_OF + " 00:00:00"),
+        era=_PL02_ERA)
 
     o = load(spark, sf_dir, "orders")
     ref = (o.filter("o_orderstatus = 'F'")
@@ -612,34 +602,16 @@ def pl02_accounting_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.expr("count(1)").alias("n_ref"),
                 F.expr("sum(cast(floor(o_totalprice * 100.0D + 0.5D)"
                        " as bigint)) / 100.0D").alias("ref_amt")))
-
-    dnull = "CAST(NULL AS DOUBLE)"
-    money_cols = ["PrincipalAmount", "Fee", "TaxOnFee", "LateFee",
-                  "TaxOnLateFee", "TotalAmountDue", "PrincipalPaid",
-                  "FeePaid", "TaxOnFeePaid", "LateFeePaid",
-                  "TaxOnLateFeePaid", "ApportionedAmountPaid"]
-    acc_out = (acc
-               .join(ref, acc.IssueMonthCDMX == ref.ref_month, "left")
-               .selectExpr(
-                   "'accounting' AS report",
-                   "IssueMonthCDMX AS month",
-                   *money_cols,
-                   f"{dnull} AS DisputeAmount",
-                   "coalesce(n_ref, 0) AS n_referral_payouts",
-                   "coalesce(ref_amt, 0.0D) AS referral_amount",
-                   "era_fee_ratio",
-               ))
-    set_out = setl.selectExpr(
-        "'settled' AS report",
-        "SettledAtMonthCDMX AS month",
-        *[f"{dnull} AS {c}" for c in money_cols[:6]],
-        *money_cols[6:12],
-        "DisputeAmount",
-        "CAST(NULL AS BIGINT) AS n_referral_payouts",
-        f"{dnull} AS referral_amount",
-        f"{dnull} AS era_fee_ratio",
-    )
-    return acc_out.unionByName(set_out)
+    acc = "report = 'accounting'"
+    return (reports
+            .join(ref, F.expr(f"{acc} AND month = ref_month"), "left")
+            .selectExpr(
+                *[c for c in reports.columns if c != "era_fee_ratio"],
+                f"IF({acc}, coalesce(n_ref, 0), NULL) AS n_referral_payouts",
+                f"IF({acc}, coalesce(ref_amt, 0.0D), NULL)"
+                " AS referral_amount",
+                "era_fee_ratio",
+            ))
 
 
 # ---------------------------------------------------------------------------

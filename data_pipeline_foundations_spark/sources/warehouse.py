@@ -23,18 +23,46 @@ def build_warehouse(spark: SparkSession, table_map: dict[str, str],
                     partition_by: dict[str, list[str]] | None = None) -> list[str]:
     """S6 — (re)build managed tables from a parquet-path → table-name map.
 
-    Overwrite per table ≙ CREATE OR REPLACE. Returns the loaded names.
+    Overwrite per table ≙ CREATE OR REPLACE. Returns the loaded names in
+    map order.
+
+    The tables are independent, so they load concurrently: one thread
+    per table, at most ``sc.defaultParallelism`` at a time. On small
+    tables the load is bound by per-job scheduling, not by cores, so the
+    loads overlap their job floors. Each thread inherits the caller's
+    job group, local properties and tags, so its jobs are attributed
+    (and cancellable) as if the caller ran them. Every load is awaited;
+    then the first failure in map order is re-raised, so a failed build
+    never returns early while other loads are still writing. A table
+    whose load failed keeps whatever its overwrite left behind.
+
+    Loads share the session concurrently, so a load must never set
+    session conf (``spark.conf.set``): the change would leak into the
+    other loads mid-plan.
     """
-    loaded = []
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
     partition_by = partition_by or {}
-    for path, table in table_map.items():
+
+    def load(path: str, table: str) -> None:
         writer = (spark.read.parquet(path)
                   .write.mode("overwrite").format("parquet"))
         if table in partition_by:
             writer = writer.partitionBy(*partition_by[table])
         writer.saveAsTable(f"{database}.{table}")
-        loaded.append(table)
-    return loaded
+
+    width = max(1, min(len(table_map), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        # wrapped here, in the caller's thread: each wrapper captures its
+        # own copy of the caller's local properties
+        futures = [pool.submit(inheritable_thread_target(spark)(load),
+                               path, table)
+                   for path, table in table_map.items()]
+    for f in futures:  # the pool's exit waited for all of them
+        f.result()
+    return list(table_map.values())
 
 
 def build_bucketed(spark: SparkSession, parquet_path: str, table: str, *,
@@ -54,15 +82,29 @@ def build_bucketed(spark: SparkSession, parquet_path: str, table: str, *,
      .saveAsTable(f"{database}.{table}"))
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote one SQL identifier part, escaping inner backticks."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def reconcile_catalog(spark: SparkSession, keep: set[str],
                       *, database: str = "default") -> list[str]:
     """S7 — drop tables in ``database`` that are not in ``keep``
-    (create_duckdb.py:82-88: SHOW TABLES minus the desired map)."""
+    (create_duckdb.py:82-88: SHOW TABLES minus the desired map).
+
+    Temp views and persistent views are kept. The listing is the
+    ``SHOW TABLES`` command, which runs no Spark job (the catalog API's
+    ``listTables`` collects a Dataset, several jobs per call)."""
+    db = quote_ident(database)
     dropped = []
-    for t in spark.catalog.listTables(database):
-        if t.tableType != "VIEW" and t.name not in keep:
-            spark.sql(f"DROP TABLE IF EXISTS {database}.`{t.name}`")
-            dropped.append(t.name)
+    for row in spark.sql(f"SHOW TABLES IN {db}").collect():
+        name = row.tableName
+        if row.isTemporary or name in keep:
+            continue
+        ident = f"{db}.{quote_ident(name)}"
+        if spark.catalog.getTable(ident).tableType != "VIEW":
+            spark.sql(f"DROP TABLE IF EXISTS {ident}")
+            dropped.append(name)
     return dropped
 
 
@@ -607,6 +649,13 @@ def rebuild_warehouse(spark: SparkSession, table_map: dict[str, str], *,
     → S7 drop stale tables → S13 poke Metabase. The S9 lock-retry lives
     at the JDBC read edge (readers.read_jdbc(retries=)) — Spark's
     metastore has no single-writer file lock to retry.
+
+    The steps run in that order. Within the load step the tables load
+    concurrently (:func:`build_warehouse`), and the step ends only when
+    every load has finished. If any load fails, its error propagates
+    from here: the reconcile and the Metabase poke do not run, so no
+    stale table is dropped on the strength of a half-built map. Loads
+    share the session concurrently and must not set session conf.
 
     ``metabase`` is a MetabaseClient (sources/metabase.py) and
     ``metabase_auth`` its (username, password, database_id); the sync is

@@ -25,6 +25,18 @@ def sf_dir() -> str:
     return SMOKE_SF
 
 
+def jobs_in_group(spark, group: str, fn):
+    """Run ``fn()`` under job group ``group``; return its result and the
+    ids of the Spark jobs the group ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

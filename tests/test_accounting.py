@@ -8,10 +8,10 @@ import datetime as dt
 import pytest
 
 from data_pipeline_foundations_spark.pipelines import (
-    accounting_detail, accounting_summary, settled_summary,
+    accounting_detail, accounting_reports, accounting_summary, settled_summary,
 )
 from data_pipeline_foundations_spark.pipelines.accounting import (
-    DETAIL_COLUMNS, detail_2025,
+    ACCOUNTING_SUM_COLS, DETAIL_COLUMNS, SETTLED_SUM_COLS, detail_2025,
 )
 from tests.conftest import LOAN_AS_OF
 
@@ -76,3 +76,35 @@ def test_settled_summary_drops_null_group(detail, spark):
     assert out.filter("SettledAtMonthCDMX IS NULL").count() == 0
     months = [r.SettledAtMonthCDMX for r in out.collect()]
     assert months == sorted(months)
+
+
+def test_accounting_reports_equal_the_two_summaries(detail):
+    """The grouping-sets fan-out returns A5's and A6's rows unchanged,
+    tagged by report, each with its own cutoff and with A6's null group
+    dropped; the era ratio matches the detail_2025 slice's cents ratio."""
+    from pyspark.sql import functions as F
+
+    era = "2025-01-01"
+    got = {(r.report, r.month): r.asDict() for r in
+           accounting_reports(detail, as_of=LOAN_AS_OF, era=era).collect()}
+    want = {}
+    for r in accounting_summary(detail, as_of=LOAN_AS_OF).collect():
+        want[("accounting", r.IssueMonthCDMX)] = {
+            c: r[c] for c in ACCOUNTING_SUM_COLS} | {"DisputeAmount": None}
+    for r in settled_summary(detail, as_of=LOAN_AS_OF).collect():
+        want[("settled", r.SettledAtMonthCDMX)] = dict.fromkeys(
+            ACCOUNTING_SUM_COLS) | {c: r[c] for c in SETTLED_SUM_COLS}
+    assert set(got) == set(want)
+    assert any(k[0] == "settled" for k in want)
+    cents = "sum(cast(floor({c} * 100.0D + 0.5D) as bigint))"
+    ratios = {r.IssueMonthCDMX: r.ratio for r in
+              detail_2025(detail, era=era).groupBy("IssueMonthCDMX").agg(
+                  (F.expr(cents.format(c="Fee")).cast("double")
+                   / F.expr(cents.format(c="PrincipalAmount"))
+                   .cast("double")).alias("ratio")).collect()}
+    assert ratios
+    for (report, month), row in got.items():
+        assert {c: row[c] for c in want[(report, month)]} \
+            == want[(report, month)]
+        assert row["era_fee_ratio"] == (
+            ratios.get(month) if report == "accounting" else None)

@@ -13,6 +13,7 @@ from data_pipeline_foundations_spark.sources import (
     FolderConnector, LocalFolderBackend, build_warehouse, read_csv,
     read_json, reconcile_catalog,
 )
+from tests.conftest import jobs_in_group
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -944,3 +945,102 @@ def test_replicate_and_squash_across_schema_boundary(spark, tmp_path):
     rows = {(r.id, r.val, r.score) for r in
             read_versioned(spark, store).collect()}
     assert rows == {(1, "a", None), (2, "b", 7)}
+
+
+# ---------------------------------------------------------------------------
+# Catalog reconcile and concurrent warehouse loads
+# ---------------------------------------------------------------------------
+@pytest.fixture()
+def wh_db(spark):
+    """A private database, so a reconcile cannot touch other tests'
+    tables in ``default``."""
+    db = "wh_reconcile_t"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    yield db
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_reconcile_quotes_names_keeps_views_and_runs_no_job(spark, wh_db):
+    """The stale-table drop quotes the name (a backtick inside it is
+    escaped), keeps temp and persistent views, and lists the catalog
+    with a command, so the whole reconcile runs no Spark job."""
+    spark.range(3).write.saveAsTable(f"{wh_db}.stale_plain")
+    # Spark's CREATE paths reject a backtick in a table name, but another
+    # metastore client can leave one behind; rename through the catalog
+    spark.range(3).write.saveAsTable(f"{wh_db}.to_rename")
+    spark._jsparkSession.sharedState().externalCatalog().renameTable(
+        wh_db, "to_rename", "we`ird")
+    spark.range(2).write.saveAsTable(f"{wh_db}.kept")
+    spark.sql(f"CREATE VIEW {wh_db}.persistent_v AS SELECT 1 AS x")
+    spark.range(2).createOrReplaceTempView("wh_temp_v")
+    try:
+        dropped, jobs = jobs_in_group(
+            spark, "reconcile_no_job",
+            lambda: reconcile_catalog(spark, keep={"kept"}, database=wh_db))
+        assert sorted(dropped) == ["stale_plain", "we`ird"]
+        assert jobs == []
+        left = {(r.tableName, r.isTemporary) for r in
+                spark.sql(f"SHOW TABLES IN {wh_db}").collect()}
+        # the listing also shows other tests' temp views; none is dropped
+        assert {t for t, temp in left if not temp} == {"kept", "persistent_v"}
+        assert ("wh_temp_v", True) in left
+    finally:
+        spark.catalog.dropTempView("wh_temp_v")
+
+
+def _tiny_parquets(spark, tmp_path, names):
+    paths = {}
+    for i, name in enumerate(names):
+        p = str(tmp_path / f"{name}.parquet")
+        spark.range(i + 1).write.parquet(p)
+        paths[p] = name
+    return paths
+
+
+def test_build_warehouse_concurrent_loads(spark, tmp_path, wh_db):
+    """Loads run in a thread pool: ``loaded`` comes back in map order,
+    every load job is attributed to the caller's job group (none runs
+    ungrouped), no tag-inheritance warning is emitted, and every table
+    holds its own input."""
+    import sys
+    import warnings
+
+    names = ["t_e", "t_b", "t_d", "t_a", "t_c", "t_f"]  # not sorted
+    table_map = _tiny_parquets(spark, tmp_path, names)
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the load threads finely
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            loaded, jobs = jobs_in_group(
+                spark, "concurrent_loads",
+                lambda: build_warehouse(spark, table_map, database=wh_db))
+    finally:
+        sys.setswitchinterval(switch)
+    assert loaded == names
+    assert len(jobs) >= len(names)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert not [w for w in caught if "will not be inherited" in str(w.message)]
+    for i, name in enumerate(names):
+        assert spark.table(f"{wh_db}.{name}").count() == i + 1
+
+
+def test_rebuild_warehouse_load_failure_skips_reconcile(spark, tmp_path,
+                                                         wh_db):
+    """A missing input path fails the rebuild after every other load has
+    finished, and the reconcile never runs: the stale table survives."""
+    from data_pipeline_foundations_spark.sources.warehouse import (
+        rebuild_warehouse,
+    )
+
+    spark.range(1).write.saveAsTable(f"{wh_db}.stale")
+    table_map = _tiny_parquets(spark, tmp_path, ["good_a", "good_b"])
+    table_map[str(tmp_path / "missing.parquet")] = "missing"
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        rebuild_warehouse(spark, table_map, database=wh_db)
+    names = {r.tableName for r in
+             spark.sql(f"SHOW TABLES IN {wh_db}").collect()}
+    assert {"stale", "good_a", "good_b"} <= names
+    assert "missing" not in names
