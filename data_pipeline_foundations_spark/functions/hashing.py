@@ -9,6 +9,11 @@ with a 15-hex-digit prefix (60 bits) parsed as a positive bigint.
 Spark:  conv(substring(md5(s), 1, 15), 16, 10) → decimal-string → bigint
 DuckDB: CAST(('0x' || substring(md5(s), 1, 15)) AS BIGINT) — verified in
 tests. 60 bits keeps everything positive and inside int64 in both engines.
+
+md5 is the only hash family. Every hashing operator is checked against
+its DuckDB oracle (tests/test_oracle_parity.py at sf0.001,
+tests/test_oracle_pin_sf001.py at sf0.01 for the kernel-backed ones),
+and a hash DuckDB cannot reproduce could not be checked that way.
 """
 
 from __future__ import annotations
@@ -35,27 +40,6 @@ def oracle_md5_long(sql_expr: str, seed: int | None = None) -> str:
     return (f"CAST(('0x' || substring(md5({s}), 1, {HEX_DIGITS})) AS BIGINT)")
 
 
-def fast_long(col: Column | str, seed: int | None = None) -> Column:
-    """PRODUCTION-path twin of :func:`md5_long`: xxhash64 (JVM-native,
-    measured ~4x cheaper per token than the md5+conv pipeline), masked to
-    the same positive 60-bit range so every downstream modulus/band/bucket
-    derivation is drop-in compatible.
-
-    NOT oracle-reproducible — DuckDB has no xxhash64 — so registry
-    queries keep md5; operators expose ``hasher="xx"`` for production
-    runs, and bench.py reports the fast-path timings as a separate
-    ``fast_variants`` dict (never mixed into the oracle-checked totals).
-    Equivalence of the two families (same plan shape, same distribution
-    properties) is pinned in tests/test_fast_hash.py.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    args = (c,) if seed is None else (F.lit(f"{seed}|"), c)
-    return F.xxhash64(*args).bitwiseAND(F.lit((1 << 60) - 1))
-
-
-HASHERS = {"md5": md5_long, "xx": fast_long}
-
-
 def md5_long_sql(tok_expr: str, seed: int | None = None) -> str:
     """Spark-SQL string twin of :func:`md5_long` — for operators that
     assemble their expression tree as ONE ``F.expr`` parse instead of a
@@ -66,13 +50,3 @@ def md5_long_sql(tok_expr: str, seed: int | None = None) -> str:
     s = tok_expr if seed is None else f"concat('{seed}|', {tok_expr})"
     return (f"CAST(conv(substring(md5({s}), 1, {HEX_DIGITS}), 16, 10)"
             f" AS BIGINT)")
-
-
-def fast_long_sql(tok_expr: str, seed: int | None = None) -> str:
-    """Spark-SQL string twin of :func:`fast_long` (same rationale as
-    :func:`md5_long_sql`)."""
-    args = tok_expr if seed is None else f"'{seed}|', {tok_expr}"
-    return f"(xxhash64({args}) & {(1 << 60) - 1})"
-
-
-HASHERS_SQL = {"md5": md5_long_sql, "xx": fast_long_sql}

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.money import round2
+from ..functions.quoting import quote_ident
 
 
 def _bucket(remaining: Column, amount: Column, tax: Column, rnd) -> tuple[Column, Column, Column]:
@@ -85,11 +86,11 @@ def waterfall_columns(df: DataFrame, *, principal: str = "principal",
         def rnd(e: str) -> str:  # functions.money.round2 as a SQL string
             return (f"(cast(floor(({e}) * 100.0D + 0.5D) as bigint)"
                     " / 100.0D)")
-    p, f_, lf = f"`{principal}`", f"`{fee}`", f"`{late_fee}`"
+    p, f_, lf = quote_ident(principal), quote_ident(fee), quote_ident(late_fee)
     tax_on_fee = rnd(f"({f_}) * 0.16D")
     tax_on_late = rnd(f"({lf}) * 0.16D")
     total_due = f"({p}) + ({f_}) + ({tax_on_fee}) + ({lf}) + ({tax_on_late})"
-    alloc = f"least(`{amount_paid}`, {total_due})"
+    alloc = f"least({quote_ident(amount_paid)}, {total_due})"
 
     lf_paid, lf_tax_paid, rem1 = _bucket_sql(alloc, lf, tax_on_late, rnd)
     fee_paid, fee_tax_paid, rem2 = _bucket_sql(rem1, f_, tax_on_fee, rnd)

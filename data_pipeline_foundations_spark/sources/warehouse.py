@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ..functions.quoting import quote_ident
+
 
 def build_warehouse(spark: SparkSession, table_map: dict[str, str],
                     *, database: str = "default",
@@ -80,11 +82,6 @@ def build_bucketed(spark: SparkSession, parquet_path: str, table: str, *,
      .write.mode("overwrite").format("parquet")
      .bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
      .saveAsTable(f"{database}.{table}"))
-
-
-def quote_ident(name: str) -> str:
-    """Backtick-quote one SQL identifier part, escaping inner backticks."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def reconcile_catalog(spark: SparkSession, keep: set[str],

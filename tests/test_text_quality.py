@@ -187,10 +187,9 @@ def test_boilerplate_removal_is_idempotent(spark, sf_dir):
 def test_repeated_window_dedup_semantics(spark):
     """x48 contract on a hand-built corpus: the globally-first occurrence
     of a duplicated window survives, every later occurrence's span is
-    masked token-wise, sub-window documents pass through untouched, and
-    the hash family does not change the output (only fingerprint
-    EQUALITY matters — the argmin tiebreak is (doc, start) arithmetic,
-    never hash order)."""
+    masked token-wise, and sub-window documents pass through untouched
+    (only fingerprint EQUALITY matters — the argmin tiebreak is
+    (doc, start) arithmetic, never hash order)."""
     from data_pipeline_foundations_spark.operators.dedup import (
         dedup_repeated_windows,
     )
@@ -201,21 +200,16 @@ def test_repeated_window_dedup_semantics(spark):
          (3, "p q r s t"),        # unique prose -> untouched
          (4, "u v")],             # shorter than the window -> no windows
         "doc_id long, text string")
-    outs = {}
-    for hasher in ("md5", "xx"):
-        rows = {r.doc_id: r for r in dedup_repeated_windows(
-            docs, win_tokens=4, hasher=hasher).collect()}
-        assert rows[1].clean_text == "a b c d e"
-        assert rows[1].n_dup_windows == 0
-        assert rows[2].clean_text == "x y w"
-        assert rows[2].n_dup_windows == 1
-        assert rows[2].n_removed_tokens == 4
-        assert rows[3].clean_text == "p q r s t"
-        assert rows[4].clean_text == "u v"
-        assert rows[4].n_tokens == 2 and rows[4].n_removed_tokens == 0
-        outs[hasher] = {d: (r.n_dup_windows, r.n_removed_tokens,
-                            r.clean_text) for d, r in rows.items()}
-    assert outs["md5"] == outs["xx"]
+    rows = {r.doc_id: r for r in dedup_repeated_windows(
+        docs, win_tokens=4).collect()}
+    assert rows[1].clean_text == "a b c d e"
+    assert rows[1].n_dup_windows == 0
+    assert rows[2].clean_text == "x y w"
+    assert rows[2].n_dup_windows == 1
+    assert rows[2].n_removed_tokens == 4
+    assert rows[3].clean_text == "p q r s t"
+    assert rows[4].clean_text == "u v"
+    assert rows[4].n_tokens == 2 and rows[4].n_removed_tokens == 0
 
 
 def test_repeated_window_dedup_requires_integral_id(spark):

@@ -62,3 +62,25 @@ def test_waterfall_matches_python_reference(spark, cases):
         # never over-pays any bucket
         assert lf <= late_fee + 0.011 and fp <= fee + 0.011
         assert pp <= principal + 1e-9
+
+
+def test_waterfall_hostile_column_names(spark):
+    """Caller column names go into the SQL text through quote_ident:
+    names holding a backtick and a space give the same values as the
+    plain names."""
+    plain = spark.createDataFrame(
+        [(0, 500.0, 1000.0, 100.0, 30.0), (1, 50.0, 200.0, 20.0, 10.0),
+         (2, 2000.0, 900.0, 90.0, 0.0)],
+        "row_id long, amount_paid double, principal double, fee double, "
+        "late_fee double")
+    names = {"amount_paid": "paid `amt`", "principal": "prin cipal`",
+             "fee": "`fee", "late_fee": "late fee"}
+    hostile = plain
+    for old, new in names.items():
+        hostile = hostile.withColumnRenamed(old, new)
+    outputs = ["tax_on_fee", "tax_on_late_fee", "total_due",
+               "late_fee_paid", "tax_on_late_fee_paid", "fee_paid",
+               "tax_on_fee_paid", "principal_paid"]
+    want = waterfall_columns(plain).select("row_id", *outputs)
+    got = waterfall_columns(hostile, **names).select("row_id", *outputs)
+    assert sorted(want.collect()) == sorted(got.collect())
