@@ -37,12 +37,18 @@ def jobs_in_group(spark, group: str, fn):
     return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
-@pytest.fixture(scope="session")
-def duck():
+def open_duck(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
     for name in TABLES:
-        p = table_path(SMOKE_SF, name)
+        p = table_path(sf_dir, name)
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
+    return con
+
+
+@pytest.fixture(scope="session")
+def duck():
+    con = open_duck(SMOKE_SF)
     yield con
     con.close()
 

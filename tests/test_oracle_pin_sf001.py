@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 from data_pipeline_foundations_spark.operators.caching import (
@@ -27,8 +26,9 @@ from data_pipeline_foundations_spark.operators.similarity import (
     oracle_srp_neighbors_sql, srp_bucket_neighbors,
 )
 from data_pipeline_foundations_spark.registry import all_queries
-from data_pipeline_foundations_spark.tables import TABLES, load, table_path
+from data_pipeline_foundations_spark.tables import load
 
+from tests.conftest import open_duck
 from tests.test_oracle_parity import assert_frames_match
 
 PINNED = ["x03_dedup_minhash_lsh", "x08_srp_ann", "x12_embedding_near_dup",
@@ -42,10 +42,7 @@ def sf001_dir(sf_dir) -> str:
 
 @pytest.fixture(scope="module")
 def duck_sf001(sf001_dir):
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
-                    f"'{table_path(sf001_dir, name)}'")
+    con = open_duck(sf001_dir)
     yield con
     con.close()
 
