@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from ..tables import scale_out
 
 EMB_SCALE = 1_000_000.0  # quantization grid: 1e-6 — shared by all tiers
@@ -621,14 +622,10 @@ def _collect_no_aqe(df: DataFrame) -> list:
     re-planning has nothing to optimize, so AQE is toggled off around
     the action. Shared by the IVF/PQ artifact builds and the Lloyd
     training iterations (r14: the per-iteration collects previously ran
-    under AQE and paid the multi-job dispatch per refinement pass)."""
-    conf = df.sparkSession.conf
-    aqe0 = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    under AQE and paid the multi-job dispatch per refinement pass). The
+    flip is scoped and locked by ``session.scoped_conf``."""
+    with scoped_conf(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
         return [r.asDict() for r in df.collect()]
-    finally:
-        conf.set("spark.sql.adaptive.enabled", aqe0)
 
 
 def _ivf_model_rows(emb: DataFrame, id_col: str, vec_col: str,

@@ -184,8 +184,9 @@ def s01_tumbling_window(spark, sf_dir):
 )
 def s02_sessionization(spark, sf_dir):
     """Sessionization: 30-min-gap sessions via lag + running sum (the
-    standard batch shape; the streaming twin is session_window). Ordering
-    tie-broken by event_id for cross-engine determinism."""
+    standard batch shape). Ordering tie-broken by event_id for cross-engine
+    determinism. The streaming twin is streaming/stateful.sessionize_stream,
+    which equals this query minus ``session_no``."""
     from pyspark.sql import Window as W
     ev = load(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -250,10 +251,11 @@ def s03_json_extraction(spark, sf_dir):
 )
 def s04_session_window(spark, sf_dir):
     """Native session windows (F.session_window, 30-min gap): the SAME
-    operator drives the streaming variant with a watermark — Spark merges
-    overlapping per-event windows into gap-separated sessions. The oracle
-    derives identical sessions via the lag/cumsum construction (session
-    end = last event + gap, matching session_window.end)."""
+    operator drives the streaming twin streaming/stateful.sessionize_stream
+    with a watermark — Spark merges overlapping per-event windows into
+    gap-separated sessions. The oracle derives identical sessions via the
+    lag/cumsum construction (session end = last event + gap, matching
+    session_window.end; the streaming twin reports the last event itself)."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))

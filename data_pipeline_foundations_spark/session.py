@@ -10,11 +10,15 @@ counts change — the engine code is identical.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_CONF_LOCK = threading.RLock()
 
 
 def get_spark(app_name: str = "data_pipeline_foundations_spark",
@@ -72,3 +76,26 @@ def get_spark(app_name: str = "data_pipeline_foundations_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set session conf ``key`` to ``value`` for the body of the block, then
+    restore the prior value (or unset it), also when the body raises.
+
+    Session conf is global to the session, so every scoped change holds
+    one module-level lock for the whole block: a second thread entering
+    any ``scoped_conf`` waits until the first one exits. The lock assumes
+    one session per driver process; it does not stop code outside these
+    blocks, nor another session sharing the conf, from seeing the value."""
+    with _CONF_LOCK:
+        conf = spark.conf
+        prior = conf.get(key, None)
+        conf.set(key, value)
+        try:
+            yield
+        finally:
+            if prior is None:
+                conf.unset(key)
+            else:
+                conf.set(key, prior)

@@ -1,88 +1,35 @@
-"""Custom stateful streaming operator: gap-based sessionization with
-``applyInPandasWithState``.
+"""Streaming gap-based sessionization on Spark's native session windows.
 
-The batch twin is plans/relational.s02_sessionization (lag + running sum).
-A streaming engine cannot window-over-everything, so sessions live in
-per-user GroupState: each micro-batch merges its events into the open
-session, EMITS sessions closed by a gap (> ``gap_minutes`` between
-events), and keeps the still-open tail in state with an event-time
-timeout. When the watermark passes ``session_end + gap`` with no new
-events, the timeout fires and the final session is emitted.
-
-Scale notes: state is one (start, end, count) triple per active user —
-bounded by the watermark, not by history; the only shuffle is the
-groupBy(user_id) that any sessionization needs; events inside a batch
-arrive as Arrow-backed pandas frames (vectorized merge, no per-row
-Python).
+The batch twins are plans/extensions.s02_sessionization (lag + running
+sum) and s04_session_window (the same ``F.session_window`` without a
+watermark). A session closes when more than ``gap_minutes`` pass between
+two events of a user. State is the merged open session per user
+(``SessionWindowStateStoreRestore`` / ``MergingSessions`` /
+``SessionWindowStateStoreSave``); it is evicted, and the session emitted
+exactly once in append mode, when the watermark passes the last event
+plus the gap. The whole operator is JVM code: no Python worker, no Arrow
+round trip per group.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import functions as F
 
 OUT_SCHEMA = ("user_id long, session_start timestamp, session_end timestamp, "
               "n_events long")
-STATE_SCHEMA = "start long, end long, n long"  # epoch microseconds
-_US = 1_000_000
-
-
-def _merge_sessions(ts_us: list[int], gap_us: int,
-                    prior: tuple[int, int, int] | None):
-    """Merge sorted event times into (closed_sessions, open_session)."""
-    closed: list[tuple[int, int, int]] = []
-    cur = prior
-    for t in ts_us:
-        if cur is None:
-            cur = (t, t, 1)
-        elif t - cur[1] > gap_us:
-            closed.append(cur)
-            cur = (t, t, 1)
-        else:
-            cur = (cur[0], max(cur[1], t), cur[2] + 1)
-    return closed, cur
 
 
 def sessionize_stream(events: DataFrame, *, gap_minutes: int = 30,
                       watermark: str = "0 seconds") -> DataFrame:
-    """events(ts, user_id, ...) → closed sessions, exactly-once per session."""
-    gap_us = gap_minutes * 60 * _US
+    """events(ts, user_id, ...) → closed sessions, exactly-once per session.
 
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        user_id = key[0]
-        prior = tuple(state.get) if state.exists else None
-
-        def emit(sessions):
-            return pd.DataFrame({
-                "user_id": [user_id] * len(sessions),
-                "session_start": [pd.Timestamp(s[0], unit="us") for s in sessions],
-                "session_end": [pd.Timestamp(s[1], unit="us") for s in sessions],
-                "n_events": [s[2] for s in sessions],
-            })
-
-        if state.hasTimedOut:
-            state.remove()
-            if prior is not None:
-                yield emit([prior])
-            return
-
-        ts_us = sorted(
-            int(t.value // 1_000) for pdf in pdfs
-            for t in pd.to_datetime(pdf["ts"]) if t is not pd.NaT)
-        closed, cur = _merge_sessions(ts_us, gap_us, prior)
-        if cur is not None:
-            state.update(cur)
-            # fire once the watermark passes the gap after the last event
-            state.setTimeoutTimestamp((cur[1] + gap_us) // 1_000)
-        if closed:
-            yield emit(closed)
-
+    Events with a NULL ``ts`` belong to no session; NULL ``user_id`` events
+    form their own sessions."""
     return (events
             .withWatermark("ts", watermark)
-            .groupBy("user_id")
-            .applyInPandasWithState(fn, OUT_SCHEMA, STATE_SCHEMA, "append",
-                                    GroupStateTimeout.EventTimeTimeout))
+            .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes"))
+            .agg(F.count(F.lit(1)).alias("n_events"),
+                 F.max("ts").alias("session_end"))
+            .select("user_id", F.col("session_window.start").alias("session_start"),
+                    "session_end", "n_events"))

@@ -1,6 +1,7 @@
-"""applyInPandasWithState sessionization: state merges across
-micro-batches (separate AvailableNow runs sharing a checkpoint) and
-sessions close exactly once on gap violations."""
+"""Native session-window sessionization: state merges across
+micro-batches (separate AvailableNow runs sharing a checkpoint), sessions
+close exactly once when the watermark passes their end plus the gap, and
+the stream equals its batch twin s02."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import datetime as dt
 import pandas as pd
 
 from data_pipeline_foundations_spark.streaming.stateful import (
-    OUT_SCHEMA, _merge_sessions, sessionize_stream,
+    OUT_SCHEMA, sessionize_stream,
 )
 
 T0 = dt.datetime(2025, 6, 1, 10, 0, 0)
@@ -33,19 +34,6 @@ def _run(spark, events_dir, out_dir, ckpt):
         return spark.read.parquet(out_dir).collect()
     except Exception:  # no output committed yet
         return []
-
-
-def test_merge_sessions_unit():
-    us = 1_000_000
-    mins = lambda m: m * 60 * us  # noqa: E731
-    closed, cur = _merge_sessions(
-        [mins(0), mins(5), mins(90), mins(95)], gap_us=mins(30), prior=None)
-    assert closed == [(mins(0), mins(5), 2)]
-    assert cur == (mins(90), mins(95), 2)
-    # prior state merges when within gap
-    closed, cur = _merge_sessions([mins(20)], gap_us=mins(30),
-                                  prior=(mins(0), mins(5), 2))
-    assert closed == [] and cur == (mins(0), mins(20), 3)
 
 
 def _drain(spark, events_dir, name):
@@ -160,12 +148,12 @@ def test_sessionize_across_microbatches(spark, tmp_path):
     out1 = _run(spark, events_dir, str(tmp_path / "out"), ckpt)
     assert out1 == []  # nothing closed yet — sessions still open in state
 
-    # batch 2: user 1 event 120min later → gap > 30 closes user 1's first
-    # session on data arrival. User 2's event at 12min MERGES with state
-    # (proving state survived the restart), and then the event-time
-    # timeout fires within the same AvailableNow run: the watermark
-    # advanced to 120min, past user 2's 12+30min gap, so no earlier event
-    # can still arrive and the merged session correctly closes too.
+    # batch 2: user 1 event 120min later → gap > 30; user 1's first
+    # session closes when the watermark passes end + gap, inside the same
+    # availableNow run. User 2's event at 12min MERGES with state
+    # (proving state survived the restart), and the merged session closes
+    # in that run too: the watermark advanced to 120min, past user 2's
+    # 12+30min gap, so no earlier event can still arrive.
     write_batch([(4, _mins(120), 1), (5, _mins(12), 2)], "b2")
     out2 = {(r.user_id, r.session_start): r for r in
             _run(spark, events_dir, str(tmp_path / "out"), ckpt)}
@@ -175,9 +163,9 @@ def test_sessionize_across_microbatches(spark, tmp_path):
     u2 = out2[(2, _mins(2))]
     assert u2.session_end == _mins(12) and u2.n_events == 2  # merged 2+12
 
-    # batch 3: far-future events advance the watermark → user 1's open
-    # 120min session times out and closes; the new 400min sessions stay
-    # open in state.
+    # batch 3: far-future events advance the watermark past user 1's open
+    # 120min session's end + gap, so it closes; the new 400min sessions
+    # stay open in state.
     write_batch([(6, _mins(400), 1), (7, _mins(400), 2)], "b3")
     out3 = {(r.user_id, r.session_start): r for r in
             _run(spark, events_dir, str(tmp_path / "out"), ckpt)}
