@@ -1,13 +1,14 @@
 """Dump the physical plan of sessionize_stream's last micro-batch.
 
-Usage: python scripts/dump_stream_plan.py --suffix before [--out-dir plans/pr4]
+Usage: python scripts/dump_stream_plan.py --sf-dir SF_DIR --suffix before
 
 Writes the events of ``--sf-dir`` as two event-time-ordered parquet files
 plus a far-future flush event, drains ``sessionize_stream`` over them with
 ``maxFilesPerTrigger=1`` and ``availableNow`` into a memory sink, and
 writes ``StreamingQuery.explain()`` of the last micro-batch to
 ``<out-dir>/sessionize_stream_<suffix>.txt``. Expression ids, plan ids,
-object hashes, run ids and the scratch directory are normalised so that two dumps diff cleanly.
+object hashes, run ids and the scratch directory are normalised so that
+two dumps diff cleanly.
 """
 from __future__ import annotations
 
@@ -35,7 +36,7 @@ from data_pipeline_foundations_spark.tables import load  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--suffix", required=True)
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
+    ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--out-dir", default=os.path.join(ROOT, "plans", "pr4"))
     args = ap.parse_args()
     os.makedirs(args.out_dir, exist_ok=True)
